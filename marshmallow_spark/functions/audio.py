@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -251,15 +250,15 @@ def reference_pcm_flat(
     hash32 = np.float32(43758.5453)
     half32 = np.float32(0.5)
     eps32 = np.float32(NOISE_AMPLITUDE)
-    for lo in range(0, total, _PCM_TILE):
-        hi = min(lo + _PCM_TILE, total)
-        m = hi - lo
-        a = sig64[lo:hi]
-        b = nz64[lo:hi]
+    for t0 in range(0, total, _PCM_TILE):
+        t1 = min(t0 + _PCM_TILE, total)
+        m = t1 - t0
+        a = sig64[t0:t1]
+        b = nz64[t0:t1]
         t = tmp[:m]
         np.floor(a, out=t)
         a -= t  # frac -> phase in [0, 1) cycles, exact in f64
-        sseg = sig[lo:hi]
+        sseg = sig[t0:t1]
         sseg[:] = a  # cast+copy in one pass
         sseg *= two_pi_32
         np.sin(sseg, out=sseg)
@@ -317,7 +316,7 @@ def reference_transcripts(idx: np.ndarray) -> pd.Series:
 
 
 # --------------------------------------------------------------------------
-# The invariant checker: mapInPandas over (clip_id, bytes, sr_hz, dur_ms,
+# The invariant checker: mapInArrow over (clip_id, bytes, sr_hz, dur_ms,
 # codec, transcript) -> violation rows
 # --------------------------------------------------------------------------
 
@@ -383,93 +382,17 @@ def _snr_db(ref_flat, dec_flat, lens) -> np.ndarray:
     return np.where(err_pow <= 1e-30, np.inf, snr)
 
 
-def check_invariant_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One Arrow batch -> violation rows (clip_id, field, message, snr_db).
-
-    Checks, in skip-on-structural-error order (parity with
-    skip_on_field_errors, /root/reference/src/marshmallow/schema.py:1162):
-      1. codec known (else "Must be one of: ...")
-      2. payload length == n_samples * width ("Truncated audio payload ...")
-      3. decoded PCM SNR >= 30 dB vs reference ("Audio does not match ...")
-      4. transcript equality vs deterministic reference
-    """
-    out_id, out_field, out_msg, out_snr = [], [], [], []
-    idx = clip_index_from_id(pdf["clip_id"])
-    sr = pdf["sr_hz"].fillna(0).to_numpy(dtype=np.int64)
-    dur = pdf["dur_ms"].fillna(0).to_numpy(dtype=np.int64)
-    codec = pdf["codec"].fillna("").to_numpy(dtype=object)
-    payload = pdf["bytes"].to_numpy(dtype=object)
-    byte_len = np.fromiter(
-        (len(b) if b is not None else -1 for b in payload), dtype=np.int64, count=len(payload)
-    )
-
-    codec_known = np.isin(codec.astype(str), KNOWN_CODECS)
-    structural_ok = codec_known & (sr > 0) & (dur > 0) & (byte_len >= 0)
-
-    choices_text = ", ".join(KNOWN_CODECS)
-    for i in np.flatnonzero(~codec_known):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("codec")
-        out_msg.append(f"Must be one of: {choices_text}.")
-        out_snr.append(None)
-
-    width = np.array([SAMPLE_WIDTH.get(str(c), 0) for c in codec], dtype=np.int64)
-    expected_bytes = n_samples(sr, dur) * width
-    bad_len = structural_ok & (byte_len != expected_bytes)
-    for i in np.flatnonzero(bad_len):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("bytes")
-        out_msg.append(
-            f"Truncated audio payload: expected {int(expected_bytes[i])} bytes, got {int(byte_len[i])}."
-        )
-        out_snr.append(None)
-
-    decodable = structural_ok & ~bad_len
-    # decode + SNR per codec subgroup (<=3 groups; batch-level numpy only)
-    for c in KNOWN_CODECS:
-        sel = np.flatnonzero(decodable & (codec == c))
-        if len(sel) == 0:
-            continue
-        buf = b"".join(payload[i] for i in sel)
-        dec = decode_payload_batch(buf, None, c)
-        ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
-        snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
-        bad = np.flatnonzero(snr < SNR_THRESHOLD_DB)
-        for j in bad:
-            i = sel[j]
-            out_id.append(pdf["clip_id"].iat[i])
-            out_field.append("bytes")
-            out_msg.append(
-                f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
-            )
-            out_snr.append(float(snr[j]))
-
-    # transcript equality vs deterministic reference
-    expected_tx = reference_transcripts(idx)
-    tx = pdf["transcript"]
-    mismatch = tx.notna().to_numpy() & (tx.fillna("") != expected_tx).to_numpy() & (idx >= 0)
-    for i in np.flatnonzero(mismatch):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("transcript")
-        out_msg.append("Transcript does not match reference.")
-        out_snr.append(None)
-
-    return pd.DataFrame(
-        {"clip_id": out_id, "field": out_field, "message": out_msg, "snr_db": out_snr}
-    )
-
-
 # --------------------------------------------------------------------------
-# Arrow-native invariant checker: mapInArrow, zero-copy payload access
+# Arrow batch plumbing shared by every audio kernel: zero-copy payload
+# access and the one chunked gather -> decode loop
 # --------------------------------------------------------------------------
 #
-# The pandas path above materializes one Python ``bytes`` object per row
-# plus a ``b"".join`` memcpy before the kernel sees a single sample. The
-# Arrow path reads the BinaryArray's flat data buffer + offsets directly
-# (zero-copy via np.frombuffer), parses clip indices by reshaping the
-# fixed-width id strings, and compares transcripts against the periodic
-# LUT with a padded 2D byte gather — no per-row Python objects anywhere
-# on the clean path (only flagged rows pay per-row string extraction).
+# Kernels read the BinaryArray's flat data buffer + offsets directly
+# (zero-copy via np.frombuffer) — no per-row Python ``bytes`` objects.
+# The invariant also parses clip indices by reshaping the fixed-width id
+# strings and compares transcripts against the periodic LUT with a
+# padded 2D byte gather, so the clean path builds no per-row Python
+# objects at all (only flagged rows pay per-row string extraction).
 
 #: transcript LUT flattened to bytes for vectorized comparison (ASCII,
 #: so utf8-byte equality == string equality)
@@ -502,12 +425,7 @@ def _varlen_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     return offsets, data
 
 
-def _gather_bytes(
-    b_data: np.ndarray,
-    offs: np.ndarray,
-    lens: np.ndarray,
-    name: str = "gather_buf",
-) -> np.ndarray:
+def _gather_bytes(b_data: np.ndarray, offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Concatenate the selected rows' payload slices into a REUSED
     per-worker workspace buffer (returns the filled uint8 view).
 
@@ -520,10 +438,7 @@ def _gather_bytes(
     Python slice assignments instead; at ~5 KB head slices the ~2 us
     Python dispatch per row cost MORE than the allocation it saved —
     clips_mfcc measured 6.1 -> 8.7 s before this form reverted it)."""
-    total = int(lens.sum())
-    buf = _WS._get(name, total, np.uint8)
-    if len(offs) == 0:
-        return buf
+    buf = _WS._get("gather_buf", int(lens.sum()), np.uint8)
     return np.concatenate(
         [
             b_data[o : o + ln]
@@ -545,6 +460,61 @@ def _np_int(arrow_ints) -> np.ndarray:
     if out.dtype.kind == "f":  # nulls promote to float+NaN
         out = np.nan_to_num(out, nan=0.0)
     return out.astype(np.int64)
+
+
+class ClipBatch:
+    """numpy view of one Arrow clips batch — the unpack every audio
+    kernel shares. ``byte_len`` is 0 for NULL payloads, ``sr`` 0 for
+    NULL rates, ``width`` the codec's sample width (0 for an unknown or
+    NULL codec) and ``is_codec`` one row mask per known codec."""
+
+    def __init__(self, batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        self.n = batch.num_rows
+        self.col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+        b_arr = self.col["bytes"]
+        self.b_valid = _np_bool(pc.is_valid(b_arr))
+        self.b_off, self.b_data = _varlen_buffers(b_arr)
+        self.byte_len = np.where(self.b_valid, np.diff(self.b_off), 0)
+        self.sr = _np_int(self.col["sr_hz"])
+        codec_arr = self.col["codec"]
+        self.is_codec = {
+            c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
+            for c in KNOWN_CODECS
+        }
+        self.width = np.zeros(self.n, dtype=np.int64)
+        for c, m in self.is_codec.items():
+            self.width[m] = SAMPLE_WIDTH[c]
+
+    def usable(self) -> np.ndarray:
+        """Whole-sample payload bytes per row: a truncated pcm16
+        payload's odd trailing byte is dropped; 0 when undecodable."""
+        return (self.byte_len // np.maximum(self.width, 1)) * self.width
+
+
+def iter_decoded_chunks(cb: ClipBatch, sel_mask: np.ndarray, nbytes: np.ndarray, chunk_rows: int):
+    """The one chunk loop of the audio kernels. Per known codec, the
+    rows of ``sel_mask`` go in chunks of at most ``chunk_rows``; each
+    chunk's first ``nbytes`` payload bytes per row are gathered into the
+    workspace and decoded in one call. Yields ``(codec, sel, lens,
+    pcm)``: the chunk's row indices, samples per row and the
+    concatenated float32 samples. ``pcm`` aliases the workspace, so
+    consume it before asking for the next chunk.
+
+    ``nbytes`` is where kernels differ: the exact payload length (the
+    invariant), the whole-sample usable length (:meth:`ClipBatch.usable`)
+    or a head prefix (the FFT kernels). The chunk bounds each worker's
+    numpy working set (see UDF_CHUNK_ROWS)."""
+    for c in KNOWN_CODECS:
+        w = SAMPLE_WIDTH[c]
+        sel_all = np.flatnonzero(sel_mask & cb.is_codec[c])
+        for lo in range(0, len(sel_all), chunk_rows):
+            sel = sel_all[lo : lo + chunk_rows]
+            nb = nbytes[sel]
+            buf = _gather_bytes(cb.b_data, cb.b_off[sel], nb)
+            yield c, sel, nb // w, decode_payload_batch(buf, None, c)
 
 
 def _clip_indices_arrow(id_off: np.ndarray, id_data: np.ndarray, valid: np.ndarray) -> np.ndarray:
@@ -634,13 +604,30 @@ def _gate_stats(x: np.ndarray, lens: np.ndarray, clip_threshold: np.float32):
     return s, ss, clipped
 
 
-def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | None = None):
+#: Rows per numpy working set inside the UDF. Arrow hands us batches of
+#: spark.sql.execution.arrow.maxRecordsPerBatch (10k) rows; at ~4k
+#: samples/clip that is ~40M samples and reference_pcm_flat's float64
+#: temporaries hit ~2-3 GB per worker — 32 workers then fight the page
+#: allocator and the stage runs SLOWER at higher parallelism (measured
+#: 26s@8w -> 70s@32w on 600k clips). Chunking to 1024 rows bounds the
+#: working set to ~100 MB/worker and restores near-linear scaling; the
+#: numpy calls stay batch-vectorized.
+UDF_CHUNK_ROWS = 1024
+
+
+def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
     """One Arrow RecordBatch -> violation RecordBatch (or None).
 
-    Same checks and messages as check_invariant_batch; payloads are
-    consumed straight from the Arrow flat buffer (views + one
-    concatenate per codec subgroup), chunked so the reference-PCM
-    workspace stays cache-friendly (see UDF_CHUNK_ROWS).
+    Checks, in skip-on-structural-error order (parity with
+    skip_on_field_errors, marshmallow src/marshmallow/schema.py:1162):
+      1. codec known (else "Must be one of: ...")
+      2. payload length == n_samples * width ("Truncated audio payload ...")
+      3. decoded PCM SNR >= 30 dB vs reference ("Audio does not match ...")
+      4. transcript equality vs deterministic reference
+
+    Payloads are consumed straight from the Arrow flat buffer, chunked
+    through iter_decoded_chunks so the reference-PCM workspace stays
+    cache-friendly (see UDF_CHUNK_ROWS).
 
     ``quality`` fuses the signal-quality gate into the SAME decode
     pass (keys: min_rms_dbfs / max_clipping_ratio / max_abs_dc_offset /
@@ -658,35 +645,21 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or UDF_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    id_arr, b_arr = col["clip_id"], col["bytes"]
+    cb = ClipBatch(batch)
+    n, col, sr, byte_len = cb.n, cb.col, cb.sr, cb.byte_len
+    id_arr = col["clip_id"]
     id_valid = _np_bool(pc.is_valid(id_arr))
     id_off, id_data = _varlen_buffers(id_arr)
     idx = _clip_indices_arrow(id_off, id_data, id_valid)
-    sr = _np_int(col["sr_hz"])
     dur = _np_int(col["dur_ms"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), -1)
 
     if "_inv_eligible" in col:
         elig = _np_bool(pc.fill_null(col["_inv_eligible"], False))
     else:
         elig = np.ones(n, dtype=bool)
 
-    codec_arr = col["codec"]
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
-    codec_known = np.zeros(n, dtype=bool)
-    width = np.zeros(n, dtype=np.int64)
-    for c, m in is_codec.items():
-        codec_known |= m
-        width[m] = SAMPLE_WIDTH[c]
-    structural_ok = elig & codec_known & (sr > 0) & (dur > 0) & (byte_len >= 0)
+    codec_known = cb.width > 0
+    structural_ok = elig & codec_known & (sr > 0) & (dur > 0) & cb.b_valid
 
     out_id: list[str] = []
     out_field: list[str] = []
@@ -700,7 +673,7 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
         out_msg.append(f"Must be one of: {choices_text}.")
         out_snr.append(None)
 
-    expected_bytes = n_samples(sr, dur) * width
+    expected_bytes = n_samples(sr, dur) * cb.width
     bad_len = structural_ok & (byte_len != expected_bytes)
     for i in np.flatnonzero(bad_len):
         out_id.append(_id_at(i, id_off, id_data))
@@ -719,64 +692,42 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
         clip_threshold = np.float32(quality["clip_threshold"])
 
     decodable = structural_ok & ~bad_len
-    for c in KNOWN_CODECS:
-        sel_all = np.flatnonzero(decodable & is_codec[c])
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], byte_len[sel])
-                if len(sel)
-                else np.empty(0, np.uint8)
+    for _, sel, _, dec in iter_decoded_chunks(cb, decodable, byte_len, UDF_CHUNK_ROWS):
+        ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
+        if quality is not None:
+            # the fused gate reuses THIS decode — the whole point:
+            # bytes are scanned and decoded once for both checks
+            s_, ss_, cl_ = _gate_stats(dec[: len(ref_flat)], lens, clip_threshold)
+            q_n[sel] = lens
+            q_s[sel] = s_
+            q_ss[sel] = ss_
+            q_clip[sel] = cl_
+            q_measured[sel] = lens > 0
+        snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
+        for j in np.flatnonzero(snr < SNR_THRESHOLD_DB):
+            i = sel[j]
+            out_id.append(_id_at(i, id_off, id_data))
+            out_field.append("bytes")
+            out_msg.append(
+                f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
             )
-            dec = decode_payload_batch(buf, None, c)
-            ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
-            if quality is not None:
-                # the fused gate reuses THIS decode — the whole point:
-                # bytes are scanned and decoded once for both checks
-                s_, ss_, cl_ = _gate_stats(
-                    dec[: len(ref_flat)], lens, clip_threshold
-                )
-                q_n[sel] = lens
-                q_s[sel] = s_
-                q_ss[sel] = ss_
-                q_clip[sel] = cl_
-                q_measured[sel] = lens > 0
-            snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
-            for j in np.flatnonzero(snr < SNR_THRESHOLD_DB):
-                i = sel[j]
-                out_id.append(_id_at(i, id_off, id_data))
-                out_field.append("bytes")
-                out_msg.append(
-                    f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
-                )
-                out_snr.append(float(snr[j]))
+            out_snr.append(float(snr[j]))
 
     if quality is not None:
         # quality-only rows the invariant never decodes (truncated
         # payloads, ineligible rows): usable-prefix decode, matching
         # standalone audio_quality_metrics semantics. Violation-rate
         # sized in practice — the clean-path common set decoded above.
-        for c in KNOWN_CODECS:
-            w = SAMPLE_WIDTH[c]
-            usable = np.where(byte_len > 0, (byte_len // w) * w, 0)
-            extra_all = np.flatnonzero(
-                is_codec[c] & b_valid & (usable > 0) & ~decodable
-            )
-            for lo in range(0, len(extra_all), chunk_rows):
-                sel = extra_all[lo : lo + chunk_rows]
-                buf = (
-                    _gather_bytes(b_data, b_off[sel], usable[sel])
-                    if len(sel)
-                    else np.empty(0, np.uint8)
-                )
-                dec = decode_payload_batch(buf, None, c)
-                lens = usable[sel] // w
-                s_, ss_, cl_ = _gate_stats(dec, lens, clip_threshold)
-                q_n[sel] = lens
-                q_s[sel] = s_
-                q_ss[sel] = ss_
-                q_clip[sel] = cl_
-                q_measured[sel] = True
+        usable = cb.usable()
+        for _, sel, lens, dec in iter_decoded_chunks(
+            cb, (usable > 0) & ~decodable, usable, UDF_CHUNK_ROWS
+        ):
+            s_, ss_, cl_ = _gate_stats(dec, lens, clip_threshold)
+            q_n[sel] = lens
+            q_s[sel] = s_
+            q_ss[sel] = ss_
+            q_clip[sel] = cl_
+            q_measured[sel] = True
 
     t_arr = col["transcript"]
     t_valid = _np_bool(pc.is_valid(t_arr))
@@ -854,56 +805,22 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
     )
 
 
-#: Rows per numpy working set inside the UDF. Arrow hands us batches of
-#: spark.sql.execution.arrow.maxRecordsPerBatch (10k) rows; at ~4k
-#: samples/clip that is ~40M samples and reference_pcm_flat's float64
-#: temporaries hit ~2-3 GB per worker — 32 workers then fight the page
-#: allocator and the stage runs SLOWER at higher parallelism (measured
-#: 26s@8w -> 70s@32w on 600k clips). Chunking to 1024 rows bounds the
-#: working set to ~100 MB/worker and restores near-linear scaling; the
-#: numpy calls stay batch-vectorized.
-UDF_CHUNK_ROWS = 1024
+def audio_invariant_violations(df):
+    """DataFrame-level entry point: a mapInArrow over the clips with
+    zero-copy payload access — no per-row bytes objects, no join memcpy
+    on the input side.
 
-
-def audio_invariant_violations(
-    df, *, chunk_rows: int = UDF_CHUNK_ROWS, engine: str = "arrow"
-):
-    """DataFrame-level entry point.
-
-    ``engine="arrow"`` (default) runs mapInArrow with zero-copy payload
-    access — no per-row bytes objects, no join memcpy on the input
-    side. ``engine="pandas"`` keeps the original mapInPandas kernel
-    (same checks/messages; retained for parity tests and as a
-    fallback). Measured end-to-end at local[8] over 600k clips the two
-    are within noise of each other (6.3-6.4s) — the decode/SNR kernel
-    dominates at this payload size — so the choice is about keeping the
-    hot path free of per-row Python object churn, not a measured win;
-    equivalence is pinned by tests/test_audio.py.
-
-    Column pruning matters at 100 TB: this selects exactly the five
+    Column pruning matters at 100 TB: this selects exactly the six
     columns the check needs, so Parquet never materializes anything
     else; the scan of ``bytes`` dominates and is unavoidable for this
     check (and ONLY this check — structural checks never read it).
     """
     pruned = df.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
 
-    if engine == "arrow":
+    def run(batches):
+        for batch in batches:
+            out = check_invariant_arrow_batch(batch)
+            if out is not None:
+                yield out
 
-        def run_arrow(batches):
-            for batch in batches:
-                out = check_invariant_arrow_batch(batch, chunk_rows=chunk_rows)
-                if out is not None:
-                    yield out
-
-        return pruned.mapInArrow(run_arrow, schema=INVARIANT_OUT_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                out = check_invariant_batch(
-                    pdf.iloc[lo : lo + chunk_rows].reset_index(drop=True)
-                )
-                if len(out):
-                    yield out
-
-    return pruned.mapInPandas(run, schema=INVARIANT_OUT_SCHEMA)
+    return pruned.mapInArrow(run, schema=INVARIANT_OUT_SCHEMA)

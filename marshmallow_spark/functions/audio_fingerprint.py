@@ -49,16 +49,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _WS,
-    _gather_bytes,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
-)
+from .audio import _WS, ClipBatch, iter_decoded_chunks
 
 FINGERPRINT_OUT_SCHEMA = (
     "clip_id string, codec string, sr_hz int, n_windows long, "
@@ -173,7 +164,6 @@ def fingerprint_batch(
     window_ms: int = WINDOW_MS_DEFAULT,
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """One Arrow RecordBatch of clips -> one fingerprint RecordBatch
     (same row count; NULL envelopes for undecodable rows; envelopes
@@ -181,25 +171,11 @@ def fingerprint_batch(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or FP_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col, sr = cb.n, cb.col, cb.sr
     codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr = _np_int(col["sr_hz"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
-    width = np.zeros(n, dtype=np.int64)
-    for c, m in is_codec.items():
-        width[m] = SAMPLE_WIDTH[c]
-    usable = np.where(width > 0, (byte_len // np.maximum(width, 1)) * width, 0)
-    n_samp = usable // np.maximum(width, 1)
+    usable = cb.usable()
+    n_samp = usable // np.maximum(cb.width, 1)
     w_all = np.maximum(sr * window_ms // 1000, 1)
     measured = (n_samp > 0) & (sr > 0)
 
@@ -210,29 +186,18 @@ def fingerprint_batch(
     data_a = np.zeros(2 * int(goff[-1]), dtype=np.int8)
     data_b = np.zeros(2 * int(goff[-1]), dtype=np.int8)
 
-    for c in KNOWN_CODECS:
-        wdt = SAMPLE_WIDTH[c]
-        sel_all = np.flatnonzero(is_codec[c] & measured)
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], usable[sel], name="fp_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // wdt
-            nwin, env_a, env_b = _window_envelope(
-                dec, lens, w_all[sel], band_db, zc_bin
-            )
-            gwin = np.repeat(goff[sel], nwin) + (
-                np.arange(int(nwin.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(nwin) - nwin, nwin)
-            )
-            data_a[2 * gwin] = env_a[0::2]
-            data_a[2 * gwin + 1] = env_a[1::2]
-            data_b[2 * gwin] = env_b[0::2]
-            data_b[2 * gwin + 1] = env_b[1::2]
+    for _, sel, lens, dec in iter_decoded_chunks(cb, measured, usable, FP_CHUNK_ROWS):
+        nwin, env_a, env_b = _window_envelope(
+            dec, lens, w_all[sel], band_db, zc_bin
+        )
+        gwin = np.repeat(goff[sel], nwin) + (
+            np.arange(int(nwin.sum()), dtype=np.int64)
+            - np.repeat(np.cumsum(nwin) - nwin, nwin)
+        )
+        data_a[2 * gwin] = env_a[0::2]
+        data_a[2 * gwin + 1] = env_a[1::2]
+        data_b[2 * gwin] = env_b[0::2]
+        data_b[2 * gwin + 1] = env_b[1::2]
 
     if 2 * goff[-1] > np.iinfo(np.int32).max:
         raise ValueError(
@@ -267,7 +232,6 @@ def acoustic_fingerprints(
     window_ms: int = WINDOW_MS_DEFAULT,
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """DataFrame entry point: (clip_id, codec, sr_hz, n_windows,
     env_a, env_b) — one row per input clip, zero shuffles (pure
@@ -281,7 +245,6 @@ def acoustic_fingerprints(
                 window_ms=window_ms,
                 band_db=band_db,
                 zc_bin=zc_bin,
-                chunk_rows=chunk_rows,
             )
 
     return pruned.mapInArrow(run, schema=FINGERPRINT_OUT_SCHEMA)
@@ -293,7 +256,6 @@ def _banded_signatures(
     window_ms: int,
     band_db: float,
     zc_bin: int,
-    chunk_rows: int,
     min_windows: int,
 ):
     """(clip_id, band, sig) rows: one md5 digest per quantization grid
@@ -312,7 +274,6 @@ def _banded_signatures(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
     ).where(
         F.col("env_a").isNotNull()
         & (F.col("n_windows") >= F.lit(int(min_windows)))
@@ -337,7 +298,6 @@ def fingerprint_duplicate_pairs(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """Same-audio candidate pairs (clip_a, clip_b, band) with
     clip_a < clip_b: clips whose quantized loudness envelopes collide
@@ -356,7 +316,6 @@ def fingerprint_duplicate_pairs(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     left = sigs.alias("l")
@@ -383,7 +342,6 @@ def fingerprint_duplicate_groups(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """Same-audio duplicate GROUPS — the scale-safe artifact: one row
     per (band, signature) bucket holding >1 clip, with member count
@@ -400,7 +358,6 @@ def fingerprint_duplicate_groups(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     return (
@@ -421,7 +378,6 @@ def fingerprint_duplicate_clusters(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """(clip_id, cluster) for every clip in an acoustic duplicate
     cluster — the transitive closure across BOTH quantization grids
@@ -442,7 +398,6 @@ def fingerprint_duplicate_clusters(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     w = Window.partitionBy("band", "sig")

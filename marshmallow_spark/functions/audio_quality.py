@@ -26,15 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _WS,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
-)
+from .audio import _WS, ClipBatch, iter_decoded_chunks
 
 #: |sample| at or above this (in [-1, 1] float PCM) counts as clipped —
 #: 0.999 captures full-scale int16 (32767/32768) plus encoder headroom.
@@ -138,22 +130,26 @@ def _segment_stats(x: np.ndarray, lens: np.ndarray):
     return s, ss, peak, clipped, zc
 
 
-def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
+def quality_metrics_arrow_batch(batch):
     """One Arrow RecordBatch of clips -> one metrics RecordBatch
     (always same row count as the input)."""
+    cb = ClipBatch(batch)
+    usable = cb.usable()
+    return _metrics_batch(
+        cb, iter_decoded_chunks(cb, usable > 0, usable, QUALITY_CHUNK_ROWS)
+    )
+
+
+def _metrics_batch(cb, chunks, *, pcm16_out: bool = False):
+    """QUALITY_OUT_SCHEMA RecordBatch for ``cb`` from iter_decoded_chunks-
+    shaped ``(codec, sel, lens, samples)`` chunks; rows no chunk covers
+    get NULL metrics. The
+    codec column echoes the input unless ``pcm16_out`` (the output
+    codec of a pcm16 re-encode: 'pcm16' where measured, else NULL)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or QUALITY_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
+    n = cb.n
     n_samp = np.zeros(n, dtype=np.int64)
     sum_x = np.zeros(n)
     sum_xx = np.zeros(n)
@@ -162,30 +158,15 @@ def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
     zcross = np.zeros(n)
     measured = np.zeros(n, dtype=bool)
 
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            if len(sel):
-                buf = np.concatenate(
-                    [b_data[b_off[i] : b_off[i] + usable[i]] for i in sel],
-                    out=_WS._get("q_buf", int(usable[sel].sum()), np.uint8),
-                )
-            else:
-                buf = np.empty(0, np.uint8)
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // width
-            s, ss, pk, cl, zc = _segment_stats(dec, lens)
-            n_samp[sel] = lens
-            sum_x[sel] = s
-            sum_xx[sel] = ss
-            peak[sel] = pk
-            clipped[sel] = cl
-            zcross[sel] = zc
-            measured[sel] = True
+    for _, sel, lens, x in chunks:
+        s, ss, pk, cl, zc = _segment_stats(x, lens)
+        n_samp[sel] = lens
+        sum_x[sel] = s
+        sum_xx[sel] = ss
+        peak[sel] = pk
+        clipped[sel] = cl
+        zcross[sel] = zc
+        measured[sel] = True
 
     with np.errstate(divide="ignore", invalid="ignore"):
         denom = np.maximum(n_samp, 1).astype(np.float64)
@@ -202,12 +183,20 @@ def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
             np.ascontiguousarray(vals, dtype=np.float64), mask=unmeasured
         )
 
+    if pcm16_out:
+        codec = pc.if_else(
+            pa.array(measured),
+            pa.scalar("pcm16", pa.string()),
+            pa.scalar(None, pa.string()),
+        )
+    else:
+        codec = pc.cast(cb.col["codec"], pa.string())
     is_silent = pa.array(rms_dbfs < SILENCE_DBFS, mask=unmeasured)
     is_clipped = pa.array(clip_ratio >= CLIPPED_RATIO, mask=unmeasured)
     return pa.RecordBatch.from_arrays(
         [
-            pc.cast(id_arr, pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(cb.col["clip_id"], pa.string()),
+            codec,
             pa.array(n_samp, type=pa.int64()),
             _f64(rms_dbfs),
             _f64(peak),
@@ -306,7 +295,6 @@ def quality_violations(
     min_rms_dbfs: float | None = None,
     max_clipping_ratio: float | None = None,
     max_abs_dc_offset: float | None = None,
-    chunk_rows: int = 0,
 ):
     """Threshold gate over the metrics: violation rows (clip_id, field,
     message) for silent / clipped / DC-offset clips, messages rendered
@@ -325,7 +313,7 @@ def quality_violations(
     from pyspark.sql import functions as F
 
     rules = _quality_rules(min_rms_dbfs, max_clipping_ratio, max_abs_dc_offset)
-    m = audio_quality_metrics(df, chunk_rows=chunk_rows)
+    m = audio_quality_metrics(df)
     return (
         m.select("clip_id", F.explode(_rule_pairs_array(rules)).alias("_v"))
         .select("clip_id", F.col("_v.field").alias("field"), F.col("_v.message").alias("message"))
@@ -339,7 +327,6 @@ def fused_audio_violations(
     max_clipping_ratio: float | None = None,
     max_abs_dc_offset: float | None = None,
     invariant_filter=None,
-    chunk_rows: int = 0,
 ):
     """SNR invariant + quality gate from ONE decode of ``bytes``:
     violation rows (clip_id, field, message, check) with check in
@@ -396,9 +383,7 @@ def fused_audio_violations(
 
     def run(batches):
         for batch in batches:
-            out = check_invariant_arrow_batch(
-                batch, chunk_rows=chunk_rows, quality=qspec
-            )
+            out = check_invariant_arrow_batch(batch, quality=qspec)
             if out is not None:
                 yield out
 
@@ -418,7 +403,7 @@ def fused_audio_violations(
     )
 
 
-def audio_quality_metrics(df, *, chunk_rows: int = 0):
+def audio_quality_metrics(df):
     """DataFrame entry point: (clip_id, codec, n_samples, rms_dbfs,
     peak, dc_offset, clipping_ratio, zero_crossing_rate, is_silent,
     is_clipped) — one output row per input clip, zero shuffles (a pure
@@ -427,7 +412,7 @@ def audio_quality_metrics(df, *, chunk_rows: int = 0):
 
     def run(batches):
         for batch in batches:
-            yield quality_metrics_arrow_batch(batch, chunk_rows=chunk_rows)
+            yield quality_metrics_arrow_batch(batch)
 
     return pruned.mapInArrow(run, schema=QUALITY_OUT_SCHEMA)
 
@@ -467,7 +452,7 @@ def _window_powers(x, lens, w):
     return nwin, ss / np.maximum(wlen, 1.0), ci, wlen
 
 
-def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: int = 0):
+def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS):
     """One Arrow RecordBatch -> reference-FREE signal/noise estimates:
     noise floor = the quietest ``window_ms`` window's RMS (speech
     pauses carry the noise bed), est SNR = overall RMS over that
@@ -480,20 +465,9 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or QUALITY_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col, sr = cb.n, cb.col, cb.sr
     codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr = _np_int(col["sr_hz"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
     nwin_all = np.zeros(n, dtype=np.int64)
     sum_pow = np.zeros(n)
     sum_len = np.zeros(n)
@@ -501,35 +475,25 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     measured = np.zeros(n, dtype=bool)
     w_all = np.maximum(sr * window_ms // 1000, 1)
 
-    for c in KNOWN_CODECS:
-        wdt = SAMPLE_WIDTH[c]
-        usable = np.where(byte_len > 0, (byte_len // wdt) * wdt, 0)
-        sel_all = np.flatnonzero(
-            is_codec[c] & b_valid & (usable > 0) & (sr > 0)
-        )
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = np.concatenate(
-                [b_data[b_off[i] : b_off[i] + usable[i]] for i in sel],
-                out=_WS._get("nf_buf", int(usable[sel].sum()), np.uint8),
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // wdt
-            nwin, wpow, ci, _ = _window_powers(dec, lens, w_all[sel])
-            nz = nwin > 0
-            woff = np.zeros(len(nwin), dtype=np.int64)
-            np.cumsum(nwin[:-1], out=woff[1:])
-            starts = woff[nz]
-            tot = np.zeros(len(nwin))
-            mn = np.zeros(len(nwin))
-            if starts.size:
-                tot[nz] = np.add.reduceat(wpow, starts)
-                mn[nz] = np.minimum.reduceat(wpow, starts)
-            nwin_all[sel] = nwin
-            sum_pow[sel] = tot
-            sum_len[sel] = nwin  # windows per clip (powers are per-window means)
-            min_pow[sel] = mn
-            measured[sel] = nwin >= 2
+    usable = cb.usable()
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, (usable > 0) & (sr > 0), usable, QUALITY_CHUNK_ROWS
+    ):
+        nwin, wpow, _, _ = _window_powers(dec, lens, w_all[sel])
+        nz = nwin > 0
+        woff = np.zeros(len(nwin), dtype=np.int64)
+        np.cumsum(nwin[:-1], out=woff[1:])
+        starts = woff[nz]
+        tot = np.zeros(len(nwin))
+        mn = np.zeros(len(nwin))
+        if starts.size:
+            tot[nz] = np.add.reduceat(wpow, starts)
+            mn[nz] = np.minimum.reduceat(wpow, starts)
+        nwin_all[sel] = nwin
+        sum_pow[sel] = tot
+        sum_len[sel] = nwin  # windows per clip (powers are per-window means)
+        min_pow[sel] = mn
+        measured[sel] = nwin >= 2
 
     with np.errstate(divide="ignore", invalid="ignore"):
         # mean of per-window mean powers (windows tile the clip; the
@@ -567,7 +531,7 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     )
 
 
-def noise_floor_metrics(df, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: int = 0):
+def noise_floor_metrics(df, *, window_ms: int = NOISE_WINDOW_MS):
     """DataFrame entry point for the reference-free estimator:
     (clip_id, codec, n_windows, rms_dbfs, noise_floor_dbfs,
     est_snr_db) — one row per clip, zero shuffles."""
@@ -575,9 +539,7 @@ def noise_floor_metrics(df, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: int
 
     def run(batches):
         for batch in batches:
-            yield noise_floor_batch(
-                batch, window_ms=window_ms, chunk_rows=chunk_rows
-            )
+            yield noise_floor_batch(batch, window_ms=window_ms)
 
     return pruned.mapInArrow(run, schema=NOISE_OUT_SCHEMA)
 
@@ -602,7 +564,6 @@ def audio_feature_drift(
     *,
     features: dict[str, tuple[float, float]] | None = None,
     nbins: int = 20,
-    chunk_rows: int = 0,
     round_digits: int = 6,
 ):
     """Distribution drift of DECODED-signal quality metrics between two
@@ -627,9 +588,7 @@ def audio_feature_drift(
     from ..operators.drift import divergence_report_multi
 
     feats = dict(features or DRIFT_FEATURES_DEFAULT)
-    m0 = audio_quality_metrics(df_ref, chunk_rows=chunk_rows).withColumn(
-        "_snap", F.lit(0)
-    )
+    m0 = audio_quality_metrics(df_ref).withColumn("_snap", F.lit(0))
     # Composition fusion (guide §4): when the current snapshot is a
     # normalize_gain transform, its metrics come from ONE decode of the
     # SOURCE payload — gain + pcm16 quantization applied in memory —
@@ -642,14 +601,11 @@ def audio_feature_drift(
     if fusion is not None:
         from .audio_transform import gain_normalized_quality_metrics
 
-        src, target_dbfs, src_chunk = fusion
-        m1 = gain_normalized_quality_metrics(
-            src, target_dbfs=target_dbfs, chunk_rows=chunk_rows or src_chunk
-        ).withColumn("_snap", F.lit(1))
+        src, target_dbfs = fusion
+        m1 = gain_normalized_quality_metrics(src, target_dbfs=target_dbfs)
     else:
-        m1 = audio_quality_metrics(df_cur, chunk_rows=chunk_rows).withColumn(
-            "_snap", F.lit(1)
-        )
+        m1 = audio_quality_metrics(df_cur)
+    m1 = m1.withColumn("_snap", F.lit(1))
     return divergence_report_multi(
         m0.unionByName(m1),
         feats,

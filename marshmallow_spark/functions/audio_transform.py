@@ -21,16 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _WS,
-    _gather_bytes,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
-)
+from .audio import _WS, ClipBatch, iter_decoded_chunks
 
 RESAMPLE_OUT_SCHEMA = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, "
@@ -51,17 +42,9 @@ def _encode_pcm16(x: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(x * 32768.0), -32768, 32767).astype("<i2")
 
 
-def _gain_scaled_pcm16_chunk(
-    b_data: np.ndarray,
-    b_off: np.ndarray,
-    usable: np.ndarray,
-    sel: np.ndarray,
-    width: int,
-    codec: str,
-    target_amp: float,
-):
-    """One codec chunk of the normalize_gain chain — decode, per-clip
-    RMS gain to ``target_amp``, clip, pcm16 quantize — with every
+def _gain_scaled_pcm16_chunk(dec32: np.ndarray, lens: np.ndarray, target_amp: float):
+    """The normalize_gain chain over one decoded chunk — per-clip RMS
+    gain to ``target_amp``, clip, pcm16 quantize — with every
     per-sample temporary in the per-worker workspace.
 
     The round-5 form allocated ~7 fresh multi-MB numpy arrays per chunk
@@ -77,25 +60,16 @@ def _gain_scaled_pcm16_chunk(
     assignment is ``_encode_pcm16``'s chain (the cast is exact — values
     are integral after rint).
 
-    Returns (pcm int16 workspace view, lens, starts, gain_db) for the
-    chunk; the views are valid until the next chunk on this worker."""
-    lens_b = usable[sel]
-    buf = _gather_bytes(b_data, b_off[sel], lens_b, name="gn_buf")
-    dec32 = decode_payload_batch(buf, None, codec)
+    Returns (pcm int16 workspace view, starts, gain_db) for the chunk;
+    the view is valid until the next chunk on this worker."""
     m = dec32.shape[0]
-    lens = lens_b // width
-    starts = np.zeros(len(sel), dtype=np.int64)
-    if len(sel) > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
     # dtype= forces the exact widen-then-square float64 loop over the
     # f32 samples — identical to the astype(float64) copy the round-5
     # form paid a full memory pass for (_segment_stats' same trick)
     sq = np.multiply(dec32, dec32, dtype=np.float64, out=_WS.f64("gn_sq", m))
-    ssum = (
-        np.add.reduceat(sq, starts)
-        if m and len(sel)
-        else np.zeros(len(sel))
-    )
+    ssum = np.add.reduceat(sq, starts) if m else np.zeros(len(lens))
     ssum[lens == 0] = 0.0
     rms = np.sqrt(ssum / np.maximum(lens, 1))
     gains = np.where(rms > 0.0, target_amp / np.maximum(rms, 1e-300), 1.0)
@@ -103,11 +77,14 @@ def _gain_scaled_pcm16_chunk(
         rms > 0.0, 20.0 * np.log10(np.maximum(gains, 1e-300)), 0.0
     )
     dec = _WS.f64("gn_dec64", m)
-    for j in range(len(sel)):
+    for j in range(len(lens)):
         s = int(starts[j])
         e = s + int(lens[j])
-        # widen-then-multiply f64 loop == astype + elementwise product
-        np.multiply(dec32[s:e], gains[j], out=dec[s:e])
+        # dtype= again: without it NumPy's value-based casting demotes
+        # the float64 gain to float32 and the product is rounded to
+        # float32 before the widening store — a 1-LSB pcm16 flip on
+        # some samples of long clips
+        np.multiply(dec32[s:e], gains[j], out=dec[s:e], dtype=np.float64)
     # the round-5 clip(-1, 1) pass is provably absorbed by the int16
     # clamp below: for |x| > 1, rint(x * 32768) lands outside
     # [-32768, 32767] exactly when clip-then-scale would, and both
@@ -117,7 +94,7 @@ def _gain_scaled_pcm16_chunk(
     np.clip(dec, -32768, 32767, out=dec)
     pcm = _WS._get("gn_pcm", m, np.dtype("<i2"))
     pcm[:] = dec
-    return pcm, lens, starts, gain_db
+    return pcm, starts, gain_db
 
 
 def _pcm16_offsets(final_off: np.ndarray) -> np.ndarray:
@@ -161,66 +138,41 @@ def _resample_flat(
     return np.interp(pos, np.arange(flat.shape[0], dtype=np.float64), flat)
 
 
-def resample_arrow_batch(batch, target_sr: int, *, chunk_rows: int = 0):
+def resample_arrow_batch(batch, target_sr: int):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or RESAMPLE_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col, sr = cb.n, cb.col, cb.sr
     id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    sr = _np_int(col["sr_hz"])
-    dur = _np_int(col["dur_ms"])
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
+    usable = cb.usable()
+    decodable = (usable > 0) & (sr > 0)
 
     # pass 1 (metadata only): output length per row, so the final
     # binary column's offsets and sample buffer can be allocated up
     # front and each chunk's samples SCATTERED into place with one
     # fancy-index assignment — no per-row Python in the assembly either
     out_n = np.zeros(n, dtype=np.int64)
-    codec_sel: dict[str, np.ndarray] = {}
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0) & (sr > 0))
-        codec_sel[c] = sel_all
-        if len(sel_all):
-            in_lens = usable[sel_all] // width
-            out_n[sel_all] = np.maximum(
-                (in_lens * target_sr + sr[sel_all] // 2) // sr[sel_all], 1
-            )
+    rows = np.flatnonzero(decodable)
+    in_lens = usable[rows] // cb.width[rows]
+    out_n[rows] = np.maximum((in_lens * target_sr + sr[rows] // 2) // sr[rows], 1)
 
     final_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(out_n, out=final_off[1:])
     data = np.zeros(int(final_off[-1]), dtype="<i2")
 
-    for c in KNOWN_CODECS:
-        sel_all = codec_sel[c]
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], usable[sel], name="tr_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c).astype(np.float64)
-            in_lens = usable[sel] // width
-            out_lens = out_n[sel]
-            res = _resample_flat(dec, in_lens, out_lens)
-            pcm = _encode_pcm16(res)
-            oo = np.zeros(len(sel), dtype=np.int64)
-            np.cumsum(out_lens[:-1], out=oo[1:])
-            local = np.arange(int(out_lens.sum()), dtype=np.int64)
-            local -= np.repeat(oo, out_lens)
-            dest = np.repeat(final_off[sel], out_lens) + local
-            data[dest] = pcm
+    for _, sel, in_lens, dec in iter_decoded_chunks(
+        cb, decodable, usable, RESAMPLE_CHUNK_ROWS
+    ):
+        out_lens = out_n[sel]
+        res = _resample_flat(dec.astype(np.float64), in_lens, out_lens)
+        pcm = _encode_pcm16(res)
+        oo = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(out_lens[:-1], out=oo[1:])
+        local = np.arange(int(out_lens.sum()), dtype=np.int64)
+        local -= np.repeat(oo, out_lens)
+        dest = np.repeat(final_off[sel], out_lens) + local
+        data[dest] = pcm
 
     valid = out_n > 0
     offsets = _pcm16_offsets(final_off)
@@ -250,7 +202,7 @@ def resample_arrow_batch(batch, target_sr: int, *, chunk_rows: int = 0):
     )
 
 
-def resample_clips(df, target_sr: int, *, chunk_rows: int = 0):
+def resample_clips(df, target_sr: int):
     """DataFrame entry point: re-encode every decodable clip as pcm16
     at ``target_sr`` (one row out per row in; undecodable rows keep
     NULL payload/codec and n_samples 0 so callers can route them to the
@@ -262,7 +214,7 @@ def resample_clips(df, target_sr: int, *, chunk_rows: int = 0):
 
     def run(batches):
         for batch in batches:
-            yield resample_arrow_batch(batch, target_sr, chunk_rows=chunk_rows)
+            yield resample_arrow_batch(batch, target_sr)
 
     return pruned.mapInArrow(run, schema=RESAMPLE_OUT_SCHEMA)
 
@@ -273,7 +225,7 @@ TRIM_OUT_SCHEMA = (
 )
 
 
-def trim_silence_arrow_batch(batch, threshold: float, *, chunk_rows: int = 0):
+def trim_silence_arrow_batch(batch, threshold: float):
     """One Arrow RecordBatch -> leading/trailing silence stripped from
     every decodable clip, re-encoded pcm16. Zero per-row Python: the
     per-clip first/last active sample comes from min/max.reduceat over
@@ -282,98 +234,62 @@ def trim_silence_arrow_batch(batch, threshold: float, *, chunk_rows: int = 0):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or RESAMPLE_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col = cb.n, cb.col
     id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
+    usable = cb.usable()
+    decodable = usable > 0
 
-    decodable = np.zeros(n, dtype=bool)
     out_n = np.zeros(n, dtype=np.int64)
     head_cut = np.zeros(n, dtype=np.int64)
     tail_cut = np.zeros(n, dtype=np.int64)
-    first_rel: dict[str, np.ndarray] = {}
-    codec_sel: dict[str, np.ndarray] = {}
+    first_rel = np.zeros(n, dtype=np.int64)
 
     # pass 1: decode per chunk, locate each clip's active run
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-        codec_sel[c] = sel_all
-        firsts = np.zeros(len(sel_all), dtype=np.int64)
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], usable[sel], name="tr_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // width
-            starts = np.zeros(len(sel), dtype=np.int64)
-            if len(sel) > 1:
-                np.cumsum(lens[:-1], out=starts[1:])
-            total = int(lens.sum())
-            idxs = np.arange(total, dtype=np.int64)
-            active = np.abs(dec) >= np.float32(threshold)
-            big = np.int64(total + 1)
-            first = np.minimum.reduceat(np.where(active, idxs, big), starts)
-            last = np.maximum.reduceat(
-                np.where(active, idxs, np.int64(-1)), starts
-            )
-            nz = lens > 0
-            silent = (~nz) | (first > last)
-            rel_first = np.where(silent, 0, first - starts)
-            rel_last = np.where(silent, -1, last - starts)
-            keep = rel_last - rel_first + 1  # 0 for fully-silent clips
-            out_n[sel] = keep
-            head_cut[sel] = np.where(silent, lens, rel_first)
-            tail_cut[sel] = np.where(silent, 0, lens - 1 - rel_last)
-            decodable[sel] = True
-            firsts[lo : lo + len(sel)] = rel_first
-        first_rel[c] = firsts
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, decodable, usable, RESAMPLE_CHUNK_ROWS
+    ):
+        starts = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        total = int(lens.sum())
+        idxs = np.arange(total, dtype=np.int64)
+        active = np.abs(dec) >= np.float32(threshold)
+        big = np.int64(total + 1)
+        first = np.minimum.reduceat(np.where(active, idxs, big), starts)
+        last = np.maximum.reduceat(
+            np.where(active, idxs, np.int64(-1)), starts
+        )
+        nz = lens > 0
+        silent = (~nz) | (first > last)
+        rel_first = np.where(silent, 0, first - starts)
+        rel_last = np.where(silent, -1, last - starts)
+        keep = rel_last - rel_first + 1  # 0 for fully-silent clips
+        out_n[sel] = keep
+        head_cut[sel] = np.where(silent, lens, rel_first)
+        tail_cut[sel] = np.where(silent, 0, lens - 1 - rel_last)
+        first_rel[sel] = rel_first
 
     final_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(out_n, out=final_off[1:])
     data = np.zeros(int(final_off[-1]), dtype="<i2")
 
     # pass 2: re-decode per chunk and scatter the kept runs
-    for c in KNOWN_CODECS:
-        sel_all = codec_sel[c]
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], usable[sel], name="tr_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c).astype(np.float64)
-            lens = usable[sel] // width
-            starts = np.zeros(len(sel), dtype=np.int64)
-            if len(sel) > 1:
-                np.cumsum(lens[:-1], out=starts[1:])
-            keep = out_n[sel]
-            kept_total = int(keep.sum())
-            if kept_total == 0:
-                continue
-            oo = np.zeros(len(sel), dtype=np.int64)
-            np.cumsum(keep[:-1], out=oo[1:])
-            local = np.arange(kept_total, dtype=np.int64)
-            local -= np.repeat(oo, keep)
-            src = (
-                np.repeat(starts + first_rel[c][lo : lo + len(sel)], keep)
-                + local
-            )
-            dest = np.repeat(final_off[sel], keep) + local
-            data[dest] = _encode_pcm16(dec[src])
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, decodable, usable, RESAMPLE_CHUNK_ROWS
+    ):
+        keep = out_n[sel]
+        kept_total = int(keep.sum())
+        if kept_total == 0:
+            continue
+        starts = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        oo = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(keep[:-1], out=oo[1:])
+        local = np.arange(kept_total, dtype=np.int64)
+        local -= np.repeat(oo, keep)
+        src = np.repeat(starts + first_rel[sel], keep) + local
+        dest = np.repeat(final_off[sel], keep) + local
+        data[dest] = _encode_pcm16(dec[src].astype(np.float64))
 
     offsets = _pcm16_offsets(final_off)
     raw_binary = pa.Array.from_buffers(
@@ -418,7 +334,7 @@ def trim_silence_arrow_batch(batch, threshold: float, *, chunk_rows: int = 0):
     )
 
 
-def trim_silence_clips(df, *, threshold: float = 1e-4, chunk_rows: int = 0):
+def trim_silence_clips(df, *, threshold: float = 1e-4):
     """DataFrame entry point: strip leading/trailing samples with
     |x| < ``threshold`` from every decodable clip (the VAD-lite
     pre-processing step before feature extraction / packing);
@@ -433,9 +349,7 @@ def trim_silence_clips(df, *, threshold: float = 1e-4, chunk_rows: int = 0):
 
     def run(batches):
         for batch in batches:
-            yield trim_silence_arrow_batch(
-                batch, threshold, chunk_rows=chunk_rows
-            )
+            yield trim_silence_arrow_batch(batch, threshold)
 
     return pruned.mapInArrow(run, schema=TRIM_OUT_SCHEMA)
 
@@ -446,9 +360,7 @@ SEGMENT_OUT_SCHEMA = (
 )
 
 
-def segment_clips_batch(
-    batch, segment_ms: int, hop_ms: int, *, chunk_rows: int = 0
-):
+def segment_clips_batch(batch, segment_ms: int, hop_ms: int):
     """One Arrow RecordBatch of clips -> one RecordBatch of fixed-length
     training windows (the audio analog of ``chunk_documents``): each
     decodable clip yields segments of ``segment_ms`` starting every
@@ -466,16 +378,10 @@ def segment_clips_batch(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or RESAMPLE_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    col, sr = cb.col, cb.sr
     id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    sr = _np_int(col["sr_hz"])
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
+    usable = cb.usable()
 
     out_clip_idx: list[np.ndarray] = []
     out_seg_idx: list[np.ndarray] = []
@@ -483,45 +389,35 @@ def segment_clips_batch(
     out_data: list[np.ndarray] = []
     out_lens: list[np.ndarray] = []
 
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0) & (sr > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            if len(sel) == 0:
-                continue
-            buf = _gather_bytes(b_data, b_off[sel], usable[sel], name="tr_buf")
-            dec = decode_payload_batch(buf, None, c).astype(np.float64)
-            lens = usable[sel] // width
-            base = np.zeros(len(sel), dtype=np.int64)
-            if len(sel) > 1:
-                np.cumsum(lens[:-1], out=base[1:])
-            seg_len = np.maximum(sr[sel] * segment_ms // 1000, 1)
-            hop = np.maximum(sr[sel] * hop_ms // 1000, 1)
-            n_segs = (lens - 1) // hop + 1  # lens > 0 by selection
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, (usable > 0) & (sr > 0), usable, RESAMPLE_CHUNK_ROWS
+    ):
+        dec = dec.astype(np.float64)
+        base = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(lens[:-1], out=base[1:])
+        seg_len = np.maximum(sr[sel] * segment_ms // 1000, 1)
+        hop = np.maximum(sr[sel] * hop_ms // 1000, 1)
+        n_segs = (lens - 1) // hop + 1  # lens > 0 by selection
 
-            clip_of_seg = np.repeat(np.arange(len(sel)), n_segs)
-            seg_off = np.zeros(len(sel), dtype=np.int64)
-            np.cumsum(n_segs[:-1], out=seg_off[1:])
-            local_seg = np.arange(int(n_segs.sum()), dtype=np.int64)
-            local_seg -= np.repeat(seg_off, n_segs)
-            starts = local_seg * hop[clip_of_seg]
-            seg_n = np.minimum(seg_len[clip_of_seg], lens[clip_of_seg] - starts)
+        clip_of_seg = np.repeat(np.arange(len(sel)), n_segs)
+        seg_off = np.zeros(len(sel), dtype=np.int64)
+        np.cumsum(n_segs[:-1], out=seg_off[1:])
+        local_seg = np.arange(int(n_segs.sum()), dtype=np.int64)
+        local_seg -= np.repeat(seg_off, n_segs)
+        starts = local_seg * hop[clip_of_seg]
+        seg_n = np.minimum(seg_len[clip_of_seg], lens[clip_of_seg] - starts)
 
-            gather_off = np.zeros(len(starts), dtype=np.int64)
-            if len(starts) > 1:
-                np.cumsum(seg_n[:-1], out=gather_off[1:])
-            local_sample = np.arange(int(seg_n.sum()), dtype=np.int64)
-            local_sample -= np.repeat(gather_off, seg_n)
-            src = np.repeat(base[clip_of_seg] + starts, seg_n) + local_sample
+        gather_off = np.zeros(len(starts), dtype=np.int64)
+        np.cumsum(seg_n[:-1], out=gather_off[1:])
+        local_sample = np.arange(int(seg_n.sum()), dtype=np.int64)
+        local_sample -= np.repeat(gather_off, seg_n)
+        src = np.repeat(base[clip_of_seg] + starts, seg_n) + local_sample
 
-            out_clip_idx.append(sel[clip_of_seg])
-            out_seg_idx.append(local_seg)
-            out_start.append(starts)
-            out_lens.append(seg_n)
-            out_data.append(_encode_pcm16(dec[src]))
+        out_clip_idx.append(sel[clip_of_seg])
+        out_seg_idx.append(local_seg)
+        out_start.append(starts)
+        out_lens.append(seg_n)
+        out_data.append(_encode_pcm16(dec[src]))
 
     if out_lens:
         clip_idx = np.concatenate(out_clip_idx)
@@ -564,9 +460,7 @@ def segment_clips_batch(
     )
 
 
-def segment_clips(
-    df, *, segment_ms: int, hop_ms: int | None = None, chunk_rows: int = 0
-):
+def segment_clips(df, *, segment_ms: int, hop_ms: int | None = None):
     """DataFrame entry point: fixed-length (optionally overlapping)
     training windows from every decodable clip, re-encoded pcm16 —
     variable fanout (rows out != rows in), zero shuffles (pure
@@ -582,9 +476,7 @@ def segment_clips(
 
     def run(batches):
         for batch in batches:
-            yield segment_clips_batch(
-                batch, segment_ms, hop_ms, chunk_rows=chunk_rows
-            )
+            yield segment_clips_batch(batch, segment_ms, hop_ms)
 
     return pruned.mapInArrow(run, schema=SEGMENT_OUT_SCHEMA)
 
@@ -595,7 +487,7 @@ GAIN_OUT_SCHEMA = (
 )
 
 
-def normalize_gain_batch(batch, target_dbfs: float, *, chunk_rows: int = 0):
+def normalize_gain_batch(batch, target_dbfs: float):
     """One Arrow RecordBatch -> every decodable clip rescaled to
     ``target_dbfs`` RMS (loudness normalization, the standard training
     corpus leveler): per-clip RMS via one reduceat over squared
@@ -606,57 +498,35 @@ def normalize_gain_batch(batch, target_dbfs: float, *, chunk_rows: int = 0):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or RESAMPLE_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col = cb.n, cb.col
     id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-    out_n = np.zeros(n, dtype=np.int64)
-    decodable = np.zeros(n, dtype=bool)
+    usable = cb.usable()
+    decodable = usable > 0
+    out_n = usable // np.maximum(cb.width, 1)
     gain_db = np.zeros(n, dtype=np.float64)
-    codec_sel: dict[str, np.ndarray] = {}
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-        codec_sel[c] = sel_all
-        out_n[sel_all] = usable[sel_all] // width
-        decodable[sel_all] = True
 
     final_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(out_n, out=final_off[1:])
     data = np.zeros(int(final_off[-1]), dtype="<i2")
 
     target_amp = 10.0 ** (target_dbfs / 20.0)
-    for c in KNOWN_CODECS:
-        sel_all = codec_sel[c]
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            if len(sel) == 0:
-                continue
-            # workspace-backed decode+gain+quantize (value-identical;
-            # see _gain_scaled_pcm16_chunk for the allocator story)
-            pcm, lens, starts, gdb = _gain_scaled_pcm16_chunk(
-                b_data, b_off, usable, sel, width, c, target_amp
-            )
-            gain_db[sel] = gdb
-            # contiguous per-row copy into the output buffer — the
-            # round-5 fancy-index scatter built three full-size index
-            # arrays (arange + two repeats) to express what is a
-            # row-sliced memcpy
-            for j in range(len(sel)):
-                s = int(starts[j])
-                ln = int(lens[j])
-                d = int(final_off[sel[j]])
-                data[d : d + ln] = pcm[s : s + ln]
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, decodable, usable, RESAMPLE_CHUNK_ROWS
+    ):
+        # workspace-backed gain+quantize (value-identical; see
+        # _gain_scaled_pcm16_chunk for the allocator story)
+        pcm, starts, gdb = _gain_scaled_pcm16_chunk(dec, lens, target_amp)
+        gain_db[sel] = gdb
+        # contiguous per-row copy into the output buffer — the
+        # round-5 fancy-index scatter built three full-size index
+        # arrays (arange + two repeats) to express what is a
+        # row-sliced memcpy
+        for j in range(len(sel)):
+            s = int(starts[j])
+            ln = int(lens[j])
+            d = int(final_off[sel[j]])
+            data[d : d + ln] = pcm[s : s + ln]
 
     offsets = _pcm16_offsets(final_off)
     raw_binary = pa.Array.from_buffers(
@@ -682,16 +552,16 @@ def normalize_gain_batch(batch, target_dbfs: float, *, chunk_rows: int = 0):
     )
 
 
-def normalize_gain(df, *, target_dbfs: float = -20.0, chunk_rows: int = 0):
+def normalize_gain(df, *, target_dbfs: float = -20.0):
     """DataFrame entry point: loudness-normalize every decodable clip
     to ``target_dbfs`` RMS (clipped pcm16 re-encode; the applied gain
     is reported in dB per clip). One row out per row in, zero shuffles
     — a pure mapInArrow over the pruned scan.
 
     The returned frame carries a ``_mms_gain_fusion`` composition tag
-    (source frame, target, chunk size): downstream kernels that only
-    need the DECODED samples of the releveled audio (audio_feature_
-    drift's current-snapshot metrics) fuse the gain transform into
+    (source frame, target): downstream kernels that only need the
+    DECODED samples of the releveled audio (audio_feature_drift's
+    current-snapshot metrics) fuse the gain transform into
     their own decode instead of consuming the re-encoded bytes —
     skipping one pcm16 encode, the Arrow/JVM round-trip of the whole
     payload column, and one decode, while producing bit-identical
@@ -705,18 +575,14 @@ def normalize_gain(df, *, target_dbfs: float = -20.0, chunk_rows: int = 0):
 
     def run(batches):
         for batch in batches:
-            yield normalize_gain_batch(
-                batch, target_dbfs, chunk_rows=chunk_rows
-            )
+            yield normalize_gain_batch(batch, target_dbfs)
 
     out = pruned.mapInArrow(run, schema=GAIN_OUT_SCHEMA)
-    out._mms_gain_fusion = (df, float(target_dbfs), chunk_rows)
+    out._mms_gain_fusion = (df, float(target_dbfs))
     return out
 
 
-def gain_normalized_quality_metrics(
-    df, *, target_dbfs: float, chunk_rows: int = 0
-):
+def gain_normalized_quality_metrics(df, *, target_dbfs: float):
     """EXACTLY ``audio_quality_metrics(normalize_gain(df, target_dbfs))``
     from ONE decode of ``bytes`` — the fused current-snapshot side of
     audio_feature_drift (guide §4: the unfused chain decodes, scales,
@@ -730,126 +596,36 @@ def gain_normalized_quality_metrics(
     exact chain in memory, so every metric matches the chained form
     bit-for-bit (pinned by tests/test_audio_transform.py::
     test_gain_metrics_fusion_exact)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .audio import _WS as WS
-    from .audio_quality import QUALITY_OUT_SCHEMA, _segment_stats
+    from .audio_quality import QUALITY_OUT_SCHEMA, _metrics_batch
 
     if not (-100.0 <= target_dbfs <= 0.0):
         raise ValueError(f"target_dbfs {target_dbfs} outside [-100, 0]")
     pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
+    target_amp = 10.0 ** (target_dbfs / 20.0)
 
-    def one_batch(batch, chunk):
-        n = batch.num_rows
-        col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        codec_arr = col["codec"]
-        b_arr = col["bytes"]
-        b_valid = _np_bool(pc.is_valid(b_arr))
-        b_off, b_data = _varlen_buffers(b_arr)
-        byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-        n_samp = np.zeros(n, dtype=np.int64)
-        sum_x = np.zeros(n)
-        sum_xx = np.zeros(n)
-        peak = np.zeros(n)
-        clipped = np.zeros(n)
-        zcross = np.zeros(n)
-        measured = np.zeros(n, dtype=bool)
-        target_amp = 10.0 ** (target_dbfs / 20.0)
-
-        for c in KNOWN_CODECS:
-            mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-            width = SAMPLE_WIDTH[c]
-            usable = (byte_len // width) * width
-            # same row selection as normalize_gain_batch: its output
-            # rows are decodable by the downstream metrics pass iff
-            # they were decodable here (pcm16 re-encode keeps
-            # usable > 0 <-> n_samples > 0)
-            sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-            for lo in range(0, len(sel_all), chunk):
-                sel = sel_all[lo : lo + chunk]
-                if len(sel) == 0:
-                    continue
-                # normalize_gain_batch's exact chain — decode -> f64 ->
-                # per-clip RMS gain -> clip -> pcm16 quantize — through
-                # the shared workspace-backed kernel (value-identical;
-                # the round-5 per-chunk allocations made this pass 4x
-                # the plain metrics pass, see _gain_scaled_pcm16_chunk)
-                pcm, lens, _starts, _gdb = _gain_scaled_pcm16_chunk(
-                    b_data, b_off, usable, sel, width, c, target_amp
-                )
-                # ... then the decoder's int16 * float32(1/32768) —
-                # bit-identical to decoding the re-encoded payload
-                samples = np.multiply(
-                    pcm,
-                    np.float32(1.0 / 32768.0),
-                    out=WS.f32("gm_dec", pcm.shape[0]),
-                )
-                s, ss, pk, cl, zc = _segment_stats(samples, lens)
-                n_samp[sel] = lens
-                sum_x[sel] = s
-                sum_xx[sel] = ss
-                peak[sel] = pk
-                clipped[sel] = cl
-                zcross[sel] = zc
-                measured[sel] = True
-
-        from .audio_quality import CLIPPED_RATIO, SILENCE_DBFS
-
-        with np.errstate(divide="ignore", invalid="ignore"):
-            denom = np.maximum(n_samp, 1).astype(np.float64)
-            rms_out = np.sqrt(sum_xx / denom)
-            rms_dbfs = 20.0 * np.log10(np.maximum(rms_out, 1e-12))
-            dc = sum_x / denom
-            clip_ratio = clipped / denom
-            zcr = zcross / np.maximum(n_samp - 1, 1).astype(np.float64)
-
-        unmeasured = ~measured
-
-        def _f64(vals):
-            return pa.array(
-                np.ascontiguousarray(vals, dtype=np.float64), mask=unmeasured
+    def scaled_chunks(cb):
+        # same row selection as normalize_gain_batch: its output rows
+        # are decodable by the downstream metrics pass iff they were
+        # decodable here (pcm16 re-encode keeps usable > 0 <->
+        # n_samples > 0)
+        usable = cb.usable()
+        for c, sel, lens, dec in iter_decoded_chunks(
+            cb, usable > 0, usable, RESAMPLE_CHUNK_ROWS
+        ):
+            # normalize_gain_batch's exact gain -> pcm16 quantize chain
+            pcm, _, _ = _gain_scaled_pcm16_chunk(dec, lens, target_amp)
+            # ... then the decoder's int16 * float32(1/32768) —
+            # bit-identical to decoding the re-encoded payload
+            samples = np.multiply(
+                pcm, np.float32(1.0 / 32768.0), out=_WS.f32("gm_dec", pcm.shape[0])
             )
-
-        # the chained form's codec column is normalize_gain's OUTPUT
-        # codec: 'pcm16' for every decodable row, NULL otherwise
-        codec_out = pc.if_else(
-            pa.array(measured),
-            pa.scalar("pcm16", pa.string()),
-            pa.scalar(None, pa.string()),
-        )
-        return pa.RecordBatch.from_arrays(
-            [
-                pc.cast(col["clip_id"], pa.string()),
-                codec_out,
-                pa.array(n_samp, type=pa.int64()),
-                _f64(rms_dbfs),
-                _f64(peak),
-                _f64(dc),
-                _f64(clip_ratio),
-                _f64(zcr),
-                pa.array(rms_dbfs < SILENCE_DBFS, mask=unmeasured),
-                pa.array(clip_ratio >= CLIPPED_RATIO, mask=unmeasured),
-            ],
-            names=[
-                "clip_id",
-                "codec",
-                "n_samples",
-                "rms_dbfs",
-                "peak",
-                "dc_offset",
-                "clipping_ratio",
-                "zero_crossing_rate",
-                "is_silent",
-                "is_clipped",
-            ],
-        )
-
-    chunk = chunk_rows or RESAMPLE_CHUNK_ROWS
+            yield c, sel, lens, samples
 
     def run(batches):
         for batch in batches:
-            yield one_batch(batch, chunk)
+            cb = ClipBatch(batch)
+            # the chained form's codec column is normalize_gain's OUTPUT
+            # codec: 'pcm16' for every decodable row, NULL otherwise
+            yield _metrics_batch(cb, scaled_chunks(cb), pcm16_out=True)
 
     return pruned.mapInArrow(run, schema=QUALITY_OUT_SCHEMA)

@@ -45,15 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _WS,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
-)
+from .audio import ClipBatch, iter_decoded_chunks
 from .audio_quality import QUALITY_CHUNK_ROWS, SILENCE_DBFS, _window_powers
 
 #: default VAD window: 20 ms is the classic frame size — short enough
@@ -78,7 +70,6 @@ def speech_activity_batch(
     window_ms: int = VAD_WINDOW_MS,
     margin_db: float = VAD_MARGIN_DB,
     silence_dbfs: float = SILENCE_DBFS,
-    chunk_rows: int = 0,
     passthrough: tuple[str, ...] = (),
 ):
     """One Arrow RecordBatch of clips -> one speech-activity RecordBatch
@@ -88,15 +79,9 @@ def speech_activity_batch(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or QUALITY_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    cb = ClipBatch(batch)
+    n, col, sr = cb.n, cb.col, cb.sr
     codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr = _np_int(col["sr_hz"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
     w_all = np.maximum(sr * window_ms // 1000, 1)
 
     nwin_all = np.zeros(n, dtype=np.int64)
@@ -109,79 +94,70 @@ def speech_activity_batch(
     thr_all = np.zeros(n)
     measured = np.zeros(n, dtype=bool)
 
-    for c in KNOWN_CODECS:
-        wdt = SAMPLE_WIDTH[c]
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        usable = np.where(byte_len > 0, (byte_len // wdt) * wdt, 0)
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0) & (sr > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = np.concatenate(
-                [b_data[b_off[i] : b_off[i] + usable[i]] for i in sel],
-                out=_WS._get("vad_buf", int(usable[sel].sum()), np.uint8),
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // wdt
-            nwin, wpow, ci, wlen = _window_powers(dec, lens, w_all[sel])
-            total = wpow.shape[0]
-            if total == 0:
-                continue
-            m = len(sel)
-            nz = nwin > 0  # usable > 0 guarantees all-True, kept for form
-            woff = np.zeros(m, dtype=np.int64)
-            np.cumsum(nwin[:-1], out=woff[1:])
-            starts = woff[nz]
+    usable = cb.usable()
+    for _, sel, lens, dec in iter_decoded_chunks(
+        cb, (usable > 0) & (sr > 0), usable, QUALITY_CHUNK_ROWS
+    ):
+        nwin, wpow, ci, wlen = _window_powers(dec, lens, w_all[sel])
+        total = wpow.shape[0]
+        if total == 0:
+            continue
+        m = len(sel)
+        nz = nwin > 0  # usable > 0 guarantees all-True, kept for form
+        woff = np.zeros(m, dtype=np.int64)
+        np.cumsum(nwin[:-1], out=woff[1:])
+        starts = woff[nz]
 
-            with np.errstate(divide="ignore"):
-                wdb = 10.0 * np.log10(np.maximum(wpow, 1e-12))
-            floor = np.full(m, np.nan)
-            peakw = np.full(m, np.nan)
-            floor[nz] = np.minimum.reduceat(wdb, starts)
-            peakw[nz] = np.maximum.reduceat(wdb, starts)
-            # adaptive two-regime threshold (module docstring)
-            thr = np.where(
-                peakw - floor <= margin_db,
-                silence_dbfs,
-                np.maximum(silence_dbfs, floor + margin_db),
-            )
-            active = wdb > thr[ci]
+        with np.errstate(divide="ignore"):
+            wdb = 10.0 * np.log10(np.maximum(wpow, 1e-12))
+        floor = np.full(m, np.nan)
+        peakw = np.full(m, np.nan)
+        floor[nz] = np.minimum.reduceat(wdb, starts)
+        peakw[nz] = np.maximum.reduceat(wdb, starts)
+        # adaptive two-regime threshold (module docstring)
+        thr = np.where(
+            peakw - floor <= margin_db,
+            silence_dbfs,
+            np.maximum(silence_dbfs, floor + margin_db),
+        )
+        active = wdb > thr[ci]
 
-            aw = np.zeros(m, dtype=np.int64)
-            aw[nz] = np.add.reduceat(active, starts)
-            asamp = np.zeros(m)
-            asamp[nz] = np.add.reduceat(np.where(active, wlen, 0.0), starts)
+        aw = np.zeros(m, dtype=np.int64)
+        aw[nz] = np.add.reduceat(active, starts)
+        asamp = np.zeros(m)
+        asamp[nz] = np.add.reduceat(np.where(active, wlen, 0.0), starts)
 
-            # run-length analysis: a run = consecutive same-activity
-            # windows within one clip; silence stats are maxima / first
-            # / last over the inactive runs
-            change = np.empty(total, dtype=bool)
-            change[0] = True
-            change[1:] = (ci[1:] != ci[:-1]) | (active[1:] != active[:-1])
-            ridx = np.flatnonzero(change)
-            run_clip = ci[ridx]
-            run_active = active[ridx]
-            run_samp = np.add.reduceat(wlen, ridx)
-            sil_samp = np.where(run_active, 0.0, run_samp)
-            rfirst = np.flatnonzero(
-                np.r_[True, run_clip[1:] != run_clip[:-1]]
-            )
-            rlast = np.r_[rfirst[1:] - 1, len(ridx) - 1]
-            lg = np.zeros(m)
-            lg[nz] = np.maximum.reduceat(sil_samp, rfirst)
-            ld = np.zeros(m)
-            ld[nz] = sil_samp[rfirst]
-            tr = np.zeros(m)
-            tr[nz] = sil_samp[rlast]
+        # run-length analysis: a run = consecutive same-activity
+        # windows within one clip; silence stats are maxima / first
+        # / last over the inactive runs
+        change = np.empty(total, dtype=bool)
+        change[0] = True
+        change[1:] = (ci[1:] != ci[:-1]) | (active[1:] != active[:-1])
+        ridx = np.flatnonzero(change)
+        run_clip = ci[ridx]
+        run_active = active[ridx]
+        run_samp = np.add.reduceat(wlen, ridx)
+        sil_samp = np.where(run_active, 0.0, run_samp)
+        rfirst = np.flatnonzero(
+            np.r_[True, run_clip[1:] != run_clip[:-1]]
+        )
+        rlast = np.r_[rfirst[1:] - 1, len(ridx) - 1]
+        lg = np.zeros(m)
+        lg[nz] = np.maximum.reduceat(sil_samp, rfirst)
+        ld = np.zeros(m)
+        ld[nz] = sil_samp[rfirst]
+        tr = np.zeros(m)
+        tr[nz] = sil_samp[rlast]
 
-            nwin_all[sel] = nwin
-            act_win[sel] = aw
-            act_samp[sel] = asamp
-            tot_samp[sel] = lens
-            lead_samp[sel] = ld
-            trail_samp[sel] = tr
-            longest_samp[sel] = lg
-            thr_all[sel] = thr
-            measured[sel] = nz
+        nwin_all[sel] = nwin
+        act_win[sel] = aw
+        act_samp[sel] = asamp
+        tot_samp[sel] = lens
+        lead_samp[sel] = ld
+        trail_samp[sel] = tr
+        longest_samp[sel] = lg
+        thr_all[sel] = thr
+        measured[sel] = nz
 
     with np.errstate(divide="ignore", invalid="ignore"):
         sr_f = np.maximum(sr, 1).astype(np.float64)
@@ -231,7 +207,6 @@ def speech_activity_metrics(
     window_ms: int = VAD_WINDOW_MS,
     margin_db: float = VAD_MARGIN_DB,
     silence_dbfs: float = SILENCE_DBFS,
-    chunk_rows: int = 0,
     passthrough: tuple[str, ...] = (),
 ):
     """DataFrame entry point: one speech-activity row per input clip —
@@ -257,7 +232,6 @@ def speech_activity_metrics(
                 window_ms=window_ms,
                 margin_db=margin_db,
                 silence_dbfs=silence_dbfs,
-                chunk_rows=chunk_rows,
                 passthrough=passthrough,
             )
 
@@ -320,7 +294,6 @@ def transcript_consistency_violations(
     window_ms: int = VAD_WINDOW_MS,
     margin_db: float = VAD_MARGIN_DB,
     silence_dbfs: float = SILENCE_DBFS,
-    chunk_rows: int = 0,
 ):
     """Cross-modal violation rows (clip_id, field, message):
 
@@ -344,7 +317,6 @@ def transcript_consistency_violations(
         window_ms=window_ms,
         margin_db=margin_db,
         silence_dbfs=silence_dbfs,
-        chunk_rows=chunk_rows,
         passthrough=("transcript",),
     ).where(F.col("active_ms").isNotNull())
     entries = [

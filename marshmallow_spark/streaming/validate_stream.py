@@ -317,9 +317,7 @@ def duplicate_keys_in_window(
     )
 
 
-def audio_invariant_stream(
-    sdf: DataFrame, *, engine: str = "arrow"
-) -> DataFrame:
+def audio_invariant_stream(sdf: DataFrame) -> DataFrame:
     """The per-row audio invariant (decode + SNR vs reference +
     transcript equality) applied to a STREAMING clips source.
 
@@ -332,12 +330,10 @@ def audio_invariant_stream(
     """
     from ..functions.audio import audio_invariant_violations
 
-    return audio_invariant_violations(sdf, engine=engine)
+    return audio_invariant_violations(sdf)
 
 
-def audio_quality_stream(
-    sdf: DataFrame, *, time_col: str | None = None, chunk_rows: int = 0
-) -> DataFrame:
+def audio_quality_stream(sdf: DataFrame, *, time_col: str | None = None) -> DataFrame:
     """Per-clip signal-quality metrics on a STREAMING clips source —
     the stateless Arrow kernel (functions/audio_quality.py
     quality_metrics_arrow_batch) composes with Structured Streaming
@@ -365,7 +361,7 @@ def audio_quality_stream(
         import pyarrow as pa
 
         for batch in batches:
-            out = quality_metrics_arrow_batch(batch, chunk_rows=chunk_rows)
+            out = quality_metrics_arrow_batch(batch)
             if time_col is not None:
                 idx = batch.schema.names.index(time_col)
                 out = pa.RecordBatch.from_arrays(
@@ -387,7 +383,6 @@ def windowed_audio_quality_psi(
     hi: float = 0.0,
     window_duration: str = "1 minute",
     watermark_delay: str = "10 minutes",
-    chunk_rows: int = 0,
 ) -> DataFrame:
     """Streaming drift over DECODED audio: per-event-time-window PSI
     of a signal-quality metric (default rms_dbfs) against a reference
@@ -397,9 +392,7 @@ def windowed_audio_quality_psi(
     diff. One stateless decode kernel feeding ONE watermarked fused
     histogram+PSI aggregation (windowed_psi's single-agg contract);
     state per open window = nbins longs. Output: (window, rows, psi)."""
-    metrics = audio_quality_stream(
-        sdf, time_col=time_col, chunk_rows=chunk_rows
-    )
+    metrics = audio_quality_stream(sdf, time_col=time_col)
     return windowed_psi(
         metrics,
         feature,

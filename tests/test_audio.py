@@ -3,10 +3,21 @@ detection, truncation, transcript mismatch — on the deterministic synth
 table."""
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 
 from marshmallow_spark.functions import audio
 from marshmallow_spark.sources.synth import generate_batch, synth_clips
+
+
+def _invariant(pdf):
+    """check_invariant_arrow_batch over a generate_batch frame, as a
+    pandas frame (empty when the kernel emits no batch)."""
+    out = audio.check_invariant_arrow_batch(pa.RecordBatch.from_pandas(pdf))
+    if out is None:
+        return pd.DataFrame(columns=["clip_id", "field", "message", "snr_db"])
+    return out.to_pandas()
 
 
 def test_ulaw_roundtrip_snr():
@@ -34,7 +45,7 @@ def test_alaw_roundtrip_snr():
 def test_clean_batch_has_no_violations():
     idx = np.arange(50, dtype=np.int64)
     pdf = generate_batch(idx, with_violations=False, dur_lo=40, dur_hi=120)
-    out = audio.check_invariant_batch(pdf)
+    out = _invariant(pdf)
     assert len(out) == 0, out
 
 
@@ -42,7 +53,7 @@ def test_injected_violations_detected():
     # indices covering each violation class
     idx = np.array([3, 5, 17, 23, 499 * 3 + 3, 991 + 5, 977 + 23], dtype=np.int64)
     pdf = generate_batch(idx, with_violations=True, dur_lo=40, dur_hi=120)
-    out = audio.check_invariant_batch(pdf)
+    out = _invariant(pdf)
     by_field = out.groupby("field").size().to_dict()
     assert by_field.get("bytes", 0) >= 3  # corrupt x2 + truncated
     assert by_field.get("transcript", 0) >= 2
@@ -54,7 +65,7 @@ def test_injected_violations_detected():
 def test_unknown_codec_detected():
     idx = np.array([17, 1019 + 17], dtype=np.int64)
     pdf = generate_batch(idx, with_violations=True, dur_lo=40, dur_hi=120)
-    out = audio.check_invariant_batch(pdf)
+    out = _invariant(pdf)
     assert "Must be one of: pcm16, ulaw, alaw." in set(out["message"])
 
 
@@ -80,21 +91,60 @@ def test_invariant_on_spark(spark):
     assert audio.audio_invariant_violations(clean).count() == 0
 
 
-def test_arrow_engine_matches_pandas_engine(spark):
-    """The mapInArrow zero-copy path and the mapInPandas path emit the
-    IDENTICAL violation set over a corpus with every planted violation
-    kind (dup/hot ids, corrupt, truncated, bad sr/dur, unknown codec,
-    null + mismatched transcripts)."""
-    from marshmallow_spark.functions.audio import audio_invariant_violations
-    from marshmallow_spark.sources.synth import synth_clips
-
-    df = synth_clips(spark, 6000, num_partitions=4)
-    rows = lambda eng: sorted(
-        tuple(r) for r in audio_invariant_violations(df, engine=eng)
-        .select("clip_id", "field", "message").collect()
+def _mixed_clip_batch(n=3000):
+    """~3k rows of every codec with the planted violations, including
+    truncated payloads (i % 991 == 5), plus every 97th payload NULL."""
+    pdf = generate_batch(
+        np.arange(n, dtype=np.int64), with_violations=True, dur_lo=40, dur_hi=120
     )
-    a, p = rows("arrow"), rows("pandas")
-    assert a == p and len(a) > 0, (len(a), len(p))
+    pdf.loc[::97, "bytes"] = None
+    return pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+
+
+def test_iter_decoded_chunks_independent_of_chunk_size():
+    """The shared chunk loop yields the same rows, in the same order,
+    with the same decoded samples per row whether a chunk holds 7 rows
+    or the whole batch."""
+    batch = _mixed_clip_batch()
+    cb = audio.ClipBatch(batch)
+    usable = cb.usable()
+    assert (~cb.b_valid).sum() > 0
+    assert (cb.b_valid & (usable != cb.byte_len)).sum() > 0  # odd-byte truncations
+    assert set(audio.KNOWN_CODECS) <= set(cb.col["codec"].to_pylist())
+
+    def decode(chunk_rows):
+        order, pcm = [], {}
+        for codec, sel, lens, x in audio.iter_decoded_chunks(
+            cb, usable > 0, usable, chunk_rows
+        ):
+            assert 0 < len(sel) <= chunk_rows
+            assert (cb.width[sel] == audio.SAMPLE_WIDTH[codec]).all()
+            assert x.shape[0] == lens.sum()
+            starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+            for i, s0, ln in zip(sel.tolist(), starts, lens):
+                pcm[i] = x[s0 : s0 + ln].copy()
+            order.extend(sel.tolist())
+        return order, pcm
+
+    small_order, small = decode(7)
+    whole_order, whole = decode(batch.num_rows)
+    assert small_order == whole_order
+    assert sorted(whole_order) == np.flatnonzero(usable > 0).tolist()
+    for i in whole_order:
+        np.testing.assert_array_equal(small[i], whole[i])
+
+
+@pytest.mark.parametrize("quality", [None, {"min_rms_dbfs": -40.0, "clip_threshold": 0.999}])
+def test_invariant_kernel_independent_of_chunk_size(monkeypatch, quality):
+    batch = _mixed_clip_batch()
+
+    def run(chunk_rows):
+        monkeypatch.setattr(audio, "UDF_CHUNK_ROWS", chunk_rows)
+        return audio.check_invariant_arrow_batch(batch, quality=quality).to_pydict()
+
+    small, whole = run(7), run(batch.num_rows)
+    assert len(whole["clip_id"]) > 0
+    assert small == whole
 
 
 def test_zero_sample_decodable_row_does_not_crash(spark):
